@@ -8,9 +8,17 @@ with quality gates (SURVEY §3.1 entry point A). ``run_ingestion`` is
 that shape as one function over a declarative ``IngestionConfig``: a
 user of the reference moves a row of TABELAS_CONFIG here 1:1.
 
-Everything stays lazy until the single write action; quality gates run
-on the written result (count reconciliation, non-empty), mirroring the
-reference's alert-then-fail posture.
+Everything stays lazy until the write, the only pass over the source:
+the write job itself observes the rows it writes and the date
+partitions they land in (``lakehouse.write_table``), which give
+``rows_read`` and the non-empty gate. One more job verifies: a count of
+the files on disk, read back with the written frame's schema (no footer
+inference) and pruned to the touched partitions and this run's
+``_run_id``. That count is both the loaded side of the count
+reconciliation and ``rows_written``, and the k-anonymity gate reads the
+same pruned frame — the reference's alert-then-fail posture (a failed
+check flags the report; nothing raises). An empty source writes nothing,
+creates no sink and fails ``non_empty``.
 """
 
 from __future__ import annotations
@@ -25,9 +33,13 @@ from pipelines_rj_sms_spark.operators.conform import (
     ensure_columns,
     safe_cast_columns,
 )
-from pipelines_rj_sms_spark.quality.checks import CheckResult, non_empty, reconcile_counts
+from pipelines_rj_sms_spark.quality.checks import CheckResult, reconcile_counts
 from pipelines_rj_sms_spark.sinks import lakehouse
-from pipelines_rj_sms_spark.sources.files import read_csv_raw, sniff_separator
+from pipelines_rj_sms_spark.sources.files import (
+    first_local_file,
+    read_csv_raw,
+    sniff_separator,
+)
 from pipelines_rj_sms_spark.sources.formats import detect_encoding, read_dbf
 
 
@@ -76,40 +88,24 @@ def _read_source(spark: SparkSession, cfg: IngestionConfig) -> DataFrame:
     fmt = cfg.source_format.lower()
     if fmt == "csv":
         sep = cfg.csv_sep or sniff_separator(spark, cfg.source_path)
-        enc = cfg.csv_encoding or detect_encoding(_first_local_file(cfg.source_path))
+        enc = cfg.csv_encoding or detect_encoding(first_local_file(cfg.source_path))
         return read_csv_raw(spark, cfg.source_path, sep=sep, encoding=enc)
     if fmt == "parquet":
         return spark.read.parquet(cfg.source_path)
     if fmt == "json":
         return spark.read.json(cfg.source_path)
     if fmt == "dbf":
-        sample = _first_local_file(cfg.source_path)
+        sample = first_local_file(cfg.source_path)
         return read_dbf(spark, cfg.source_path, sample)
     if fmt == "xlsx":
         from pipelines_rj_sms_spark.sources.formats import read_xlsx
-        return read_xlsx(spark, _first_local_file(cfg.source_path))
+        return read_xlsx(spark, first_local_file(cfg.source_path))
     raise ValueError(f"unknown source_format: {cfg.source_format!r}")
-
-
-def _first_local_file(path_glob: str) -> str:
-    import glob as _glob
-    import os
-
-    if os.path.isfile(path_glob):
-        return path_glob
-    matches = sorted(_glob.glob(path_glob)) or sorted(
-        _glob.glob(os.path.join(path_glob, "*")))
-    if not matches:
-        raise FileNotFoundError(path_glob)
-    return matches[0]
 
 
 def run_ingestion(spark: SparkSession, cfg: IngestionConfig) -> IngestionReport:
     """acquire -> conform -> (casts/contract) -> partitioned write -> verify."""
-    raw = _read_source(spark, cfg)
-    rows_read = raw.count()
-
-    df = conform(raw, source=cfg.name)
+    df = conform(_read_source(spark, cfg), source=cfg.name)
     if cfg.run_id is not None:
         from pyspark.sql import functions as F
 
@@ -119,14 +115,20 @@ def run_ingestion(spark: SparkSession, cfg: IngestionConfig) -> IngestionReport:
     if cfg.casts:
         df = safe_cast_columns(df, cfg.casts)
 
-    checks: list[CheckResult] = [non_empty(df)]
     # cfg.ts_col refers to the post-conform (cleaned) column name
-    lakehouse.write_table(df, cfg.sink_path, mode=cfg.dump_mode, ts_col=cfg.ts_col)
+    write = lakehouse.write_table(df, cfg.sink_path, mode=cfg.dump_mode,
+                                  ts_col=cfg.ts_col)
+    rows_read = write["rows"]
+    checks = [CheckResult("non_empty", rows_read > 0, {})]
+    if rows_read == 0:
+        return IngestionReport(cfg.name, 0, 0, checks)
 
-    written = lakehouse.read_table(spark, cfg.sink_path)
+    written = lakehouse.read_written(spark, cfg.sink_path, df.schema,
+                                     write["partitions"])
     if cfg.run_id is not None:
         written = written.filter(written["_run_id"] == cfg.run_id)
-    checks.append(reconcile_counts(rows_read, written, cfg.reconcile_tolerance))
+    reconciled = reconcile_counts(rows_read, written, cfg.reconcile_tolerance)
+    checks.append(reconciled)
     if cfg.k_anon is not None:
         from pipelines_rj_sms_spark.quality.checks import (
             k_anonymity_violations)
@@ -136,8 +138,8 @@ def run_ingestion(spark: SparkSession, cfg: IngestionConfig) -> IngestionReport:
         checks.append(CheckResult(
             "k_anonymity", n_bad == 0,
             {"quasi": quasi, "k": k, "violating_groups": n_bad}))
-    rows_written = written.count()
-    return IngestionReport(cfg.name, rows_read, rows_written, checks)
+    return IngestionReport(cfg.name, rows_read,
+                           reconciled.details["loaded"], checks)
 
 
 def run_many(spark: SparkSession, configs: list[IngestionConfig],

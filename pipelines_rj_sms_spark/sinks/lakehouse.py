@@ -12,8 +12,10 @@ levels is free. ``overwrite`` relies on dynamic partitionOverwriteMode
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from pipelines_rj_sms_spark.operators.conform import with_date_partitions
 
@@ -23,29 +25,61 @@ PARTITION_COLS = ["ano_particao", "mes_particao", "data_particao"]
 def write_table(df: DataFrame, path: str, mode: str = "append",
                 ts_col: str | None = None,
                 partition: bool = True,
-                file_format: str = "parquet") -> None:
+                file_format: str = "parquet") -> dict:
     """K1/K2: write a batch to the lakehouse.
 
     mode='append'  -> add files to existing partitions
     mode='overwrite' -> replace only the partitions present in ``df``
-    Empty inputs short-circuit (Q9, utils/tasks.py:950-951).
     ``file_format``: any Spark batch sink built in to the distribution
     ("parquet" default; "orc" / "json" / "csv" verified) — the same
     dynamic-partition-overwrite semantics apply to all of them.
+
+    Returns metrics observed on the rows as they stream into the write
+    job (a ``pyspark.sql.Observation``, so no extra pass over ``df``):
+    ``{"rows": <rows written>, "partitions": <data_particao values
+    written>}``. ``partitions`` is ``None`` when the table is not
+    date-partitioned and holds ``None`` for rows whose ``ts_col`` is
+    null; ``read_written`` reads back exactly these partitions.
+
+    Empty input (Q9, utils/tasks.py:950-951) leaves an existing table's
+    data unchanged in every mode and creates no table: an empty
+    partitioned write adds no data file (append and dynamic overwrite
+    touch no partition), and what an empty write leaves at a path that
+    did not exist before (the directory and ``_SUCCESS``) is removed.
+    An unpartitioned overwrite would replace the table with an empty
+    file, so it alone probes ``isEmpty()`` before writing.
     """
-    if df.isEmpty():
-        return
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     if partition and ts_col is not None:
         df = with_date_partitions(df, ts_col)
+    present = [c for c in PARTITION_COLS if c in df.columns] if partition else []
+    if mode == "overwrite" and not present and df.isEmpty():
+        return {"rows": 0, "partitions": None}
+    metrics = [F.count(F.lit(1)).alias("rows")]
+    if "data_particao" in present:
+        # collect_set skips nulls; a struct is never null, so the null
+        # date of rows with a null ts_col stays in the set
+        metrics.append(
+            F.collect_set(F.struct("data_particao")).alias("partitions"))
+    observation = Observation()
+    existed = table_exists(path)
     # per-write dynamic overwrite (Spark 3.0+): self-contained even on a
     # session whose default is static — where mode('overwrite') to the
     # base path would silently delete every partition not in this batch
-    writer = df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
-    if partition:
-        present = [c for c in PARTITION_COLS if c in df.columns]
-        if present:
-            writer = writer.partitionBy(*present)
+    writer = (df.observe(observation, *metrics).write.mode(mode)
+              .option("partitionOverwriteMode", "dynamic"))
+    if present:
+        writer = writer.partitionBy(*present)
     writer.format(file_format).save(path)
+    observed = observation.get
+    if observed["rows"] == 0 and not existed:
+        shutil.rmtree(path, ignore_errors=True)
+    partitions = observed.get("partitions")
+    return {"rows": observed["rows"],
+            "partitions": None if partitions is None
+            else [p["data_particao"] for p in partitions]}
 
 
 def read_table(spark: SparkSession, path: str,
@@ -53,6 +87,26 @@ def read_table(spark: SparkSession, path: str,
     """Partition-discovering read of a lakehouse table."""
     return (spark.read.option("basePath", path)
             .format(file_format).load(path))
+
+
+def read_written(spark: SparkSession, path: str, schema: StructType,
+                 partitions: list | None) -> DataFrame:
+    """Read back the partitions one ``write_table`` call landed in a
+    parquet table, leaving the rest of it unopened: ``schema`` (the
+    written frame's) replaces footer inference (a Spark job), partition
+    columns missing from it are typed from the directory names, and
+    ``partitions`` (the write's observed ``data_particao`` values;
+    ``None`` = not date-partitioned, read everything) prunes the scan.
+    """
+    from pyspark.sql import functions as F
+
+    back = spark.read.schema(schema).option("basePath", path).parquet(path)
+    if partitions is None:
+        return back
+    pred = F.col("data_particao").isin([p for p in partitions if p is not None])
+    if None in partitions:
+        pred = pred | F.col("data_particao").isNull()
+    return back.filter(pred)
 
 
 def merge_upsert(spark: SparkSession, path: str, updates: DataFrame,
@@ -79,8 +133,6 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame,
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    if updates.isEmpty():
-        return
     if ts_col is not None:
         updates = with_date_partitions(updates, ts_col)
     part_cols = [c for c in PARTITION_COLS if c in updates.columns]
@@ -92,9 +144,11 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame,
     if table_exists(path):
         # partition-prune the target read to the updates' partitions;
         # collect() here is bounded by the number of touched dates, not
-        # data size
+        # data size; no touched date means the updates are empty
         touched = [tuple(r) for r in
                    updates.select(*part_cols).distinct().collect()]
+        if not touched:
+            return
         existing = read_table(spark, path).withColumn("_is_update", F.lit(0))
         pred = F.lit(False)
         for vals in touched:
@@ -103,6 +157,8 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame,
                 row_match = row_match & (F.col(c) == F.lit(v))
             pred = pred | row_match
         merged = existing.filter(pred).unionByName(updates)
+    elif updates.isEmpty():
+        return
     else:
         merged = updates
 
@@ -252,7 +308,6 @@ def expire_partitions(path: str, keep_days: int,
     data); deletion is per data_particao leaf, so ano/mes levels shrink
     naturally as their children empty.
     """
-    import shutil
     from datetime import date, timedelta
 
     if keep_days < 1:
@@ -306,8 +361,6 @@ def scd2_merge(spark: SparkSession, path: str, updates: DataFrame,
     the CURRENT row set + closed history — acceptable for dimensions,
     wrong for facts (use append + dedup-at-read there).
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     from pipelines_rj_sms_spark.operators.dedup import dedup_keep_last

@@ -14,7 +14,10 @@
 from __future__ import annotations
 
 import csv as _csv
+import glob
 import io
+import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,9 +75,46 @@ def read_json_quarantine(spark: SparkSession, path: str,
     return good, bad
 
 
+def first_local_file(path: str) -> str:
+    """The first data file (sorted by name) behind a local file path,
+    glob or directory — the sample the driver-side sniffers read.
+    Directories, whether given or matched by the glob, yield their own
+    first data file; names starting with ``_`` or ``.`` (``_SUCCESS``,
+    ``.crc`` side files) are never data, as in Spark's file listing.
+    """
+    if os.path.isfile(path):
+        return path
+    pattern = os.path.join(path, "*") if os.path.isdir(path) else path
+    for match in sorted(glob.glob(pattern)):
+        if os.path.basename(match).startswith(("_", ".")):
+            continue
+        if os.path.isfile(match):
+            return match
+        if os.path.isdir(match):
+            try:
+                return first_local_file(match)
+            except FileNotFoundError:
+                continue
+    raise FileNotFoundError(path)
+
+
 def sniff_separator(spark: SparkSession, path: str,
                     candidates: tuple[str, ...] = (",", ";")) -> str:
-    """F8: pick the separator with most hits on the first line."""
+    """F8: pick the separator with most hits on the first line.
+
+    A local path (file, glob or directory) is sniffed on the driver from
+    the first line of ``first_local_file(path)``, read as bytes: the
+    candidates are ASCII, so the count is the same in UTF-8, cp1252 and
+    cp850 drops alike. URIs with a scheme, and paths not on the local
+    disk (a cluster's default file system), take one line through Spark.
+    """
+    if not urlparse(path).scheme:
+        try:
+            with open(first_local_file(path), "rb") as f:
+                head = f.readline()
+            return max(candidates, key=lambda c: head.count(c.encode()))
+        except FileNotFoundError:
+            pass
     first = spark.read.text(path).limit(1).collect()
     if not first:
         return candidates[0]

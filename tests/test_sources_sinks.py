@@ -25,10 +25,26 @@ def test_read_csv_raw_all_string(spark, tmp_path):
     assert rows[1]["c"] == ""
 
 
-def test_sniff_separator(spark, tmp_path):
+def test_sniff_separator(spark, tmp_path, count_jobs):
     p = tmp_path / "semi.csv"
     p.write_text("a;b;c\n1;2;3\n")
     assert sniff_separator(spark, str(p)) == ";"
+
+    # globs and directories sniff their first data file (Spark's side
+    # files skipped), as bytes: a cp1252 header decodes to the same count
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "_SUCCESS").write_text("")
+    (drop / ".part-0.csv.crc").write_text("x,y,z,w\n")
+    (drop / "part-0.csv").write_bytes("Código;Situação,x;y\n1;2,3;4\n"
+                                      .encode("cp1252"))
+    (drop / "part-1.csv").write_text("a,b,c\n1,2,3\n")
+    for path in (str(drop), str(drop / "*.csv"), str(tmp_path / "dr*")):
+        assert sniff_separator(spark, path) == ";"
+    # the local paths sniff on the driver: no Spark job
+    assert count_jobs(lambda: sniff_separator(spark, str(drop))) == 0
+    # a URI with a scheme still goes through Spark
+    assert sniff_separator(spark, f"file://{p}") == ";"
 
 
 def test_read_fixed_width(spark, tmp_path):
@@ -83,6 +99,33 @@ def test_lakehouse_write_partitioned(spark, tmp_path):
     # empty-input short-circuit (Q9)
     write_table(df.limit(0), path, mode="overwrite", ts_col="ts")
     assert read_table(spark, path).count() == 2
+
+
+def _two_days(spark):
+    return spark.createDataFrame(
+        [("a", "2024-01-01 10:00:00"), ("b", "2024-02-01 10:00:00")], ["v", "ts"]
+    ).select("v", F.col("ts").cast("timestamp").alias("ts"))
+
+
+@pytest.mark.parametrize("mode", ["append", "overwrite"])
+@pytest.mark.parametrize("ts_col", ["ts", None])
+def test_write_table_empty_input_creates_no_table(spark, tmp_path, mode, ts_col):
+    path = str(tmp_path / "new")
+    got = write_table(_two_days(spark).limit(0), path, mode=mode, ts_col=ts_col)
+    assert got == {"rows": 0, "partitions": [] if ts_col else None}
+    assert not os.path.exists(path)
+
+
+@pytest.mark.parametrize("mode", ["append", "overwrite"])
+@pytest.mark.parametrize("ts_col", ["ts", None])
+def test_write_table_empty_input_keeps_existing_data(spark, tmp_path, mode,
+                                                     ts_col):
+    # the unpartitioned overwrite case holds only through the empty probe
+    path = str(tmp_path / "tbl")
+    df = _two_days(spark)
+    assert write_table(df, path, ts_col=ts_col)["rows"] == 2
+    write_table(df.limit(0), path, mode=mode, ts_col=ts_col)
+    assert sorted(r["v"] for r in read_table(spark, path).collect()) == ["a", "b"]
 
 
 def test_validate_statement_blocks_destructive():
